@@ -226,6 +226,7 @@ def main(argv=None) -> int:
     # everything Spark and Python spill stays inside the checkout
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UsePerfData"  # no hsperfdata file in /tmp
     tempfile.tempdir = None
 
     import pdf_extraction_spark

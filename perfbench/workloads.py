@@ -83,7 +83,6 @@ class Workload:
 
     def __init__(self, bench):
         self.bench = bench
-        self.dir = None
 
     @property
     def spark(self):
@@ -99,16 +98,14 @@ class Workload:
         return self.bench.tracer.span(name, **attrs)
 
     def pages_dir(self, make_rows=inputs.synth_rows, reference=False) -> str:
-        """Generate the seeded pages table (and its reference digests) on
-        the first set-up of a run; later set-ups load the same files."""
-        if self.dir is None:
-            rows = make_rows(self.bench.seed, self.bench.size(self.DOCS))
-            self.n_docs = len(rows)
-            self.payload_mb = inputs.payload_mb(rows)
-            self.dir = inputs.write_pages(rows, self.fresh_dir("pages"), N_FILES)
-            if reference:
-                self.reference, self.n_turns = gates.reference_digests(rows)
-        return self.dir
+        """Generate the seeded pages table, and its reference digests, into
+        a fresh directory; every set-up does this."""
+        rows = make_rows(self.bench.seed, self.bench.size(self.DOCS))
+        self.n_docs = len(rows)
+        self.payload_mb = inputs.payload_mb(rows)
+        if reference:
+            self.reference, self.n_turns = gates.reference_digests(rows)
+        return inputs.write_pages(rows, self.fresh_dir("pages"), N_FILES)
 
     def layers_from_log(self, log, kernel_us_per_doc) -> dict:
         """Per-layer metrics read from the Spark event log after the run."""
