@@ -12,6 +12,8 @@ Rerank (W5) is the reference's weighted score
 reference uses now(); deviation documented in SURVEY.md §4.4).
 """
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -60,6 +62,50 @@ def cosine_col(a: Column, b: Column) -> Column:
     """cosine similarity; 0.0 when either norm is zero (simple_rag.py:63)."""
     na, nb = norm_col(a), norm_col(b)
     return F.when((na == 0.0) | (nb == 0.0), 0.0).otherwise(dot_col(a, b) / (na * nb))
+
+
+def spark_double_sql(x: float) -> str:
+    """A double as Spark-SQL text that parses back to the same bits:
+    ``repr`` is the shortest round-trip decimal and the ``D`` suffix
+    makes it a DOUBLE literal (a bare ``0.1`` is a DECIMAL)."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    name = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def fold_norm(vec) -> float:
+    """Python twin of :func:`norm_col`: the same left fold
+    ``acc + x*x`` from 0.0 then ``sqrt``, in IEEE doubles, so the bits
+    equal what Spark computes for the same vector."""
+    acc = 0.0
+    for x in vec:
+        x = float(x)
+        acc = acc + x * x
+    return math.sqrt(acc)
+
+
+def sql_cosine_lit(vec_col: str, query_vec, round_digits: int = 6) -> str:
+    """Spark-SQL twin of ``round(cosine_col(col(vec_col), q), round_digits)``
+    against a literal query vector ``q``, as ONE expression string — one
+    JVM call to parse, where the Column builder costs a py4j round trip
+    per node. The query vector enters once as an array literal and its
+    norm is folded in Python (:func:`fold_norm`); the row-side norm,
+    the dot product and the zero-norm guard keep :func:`cosine_col`'s
+    shape, so values and result nullability are identical."""
+    q = [float(x) for x in query_vec]
+    v = "`" + vec_col.replace("`", "``") + "`"
+    mul = "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)"
+    add = "(acc, x) -> acc + x"
+    lit = "array(" + ", ".join(spark_double_sql(x) for x in q) + ")"
+    dot = f"aggregate(zip_with({v}, {lit}, {mul}), 0.0D, {add})"
+    na = f"sqrt(aggregate(zip_with({v}, {v}, {mul}), 0.0D, {add}))"
+    nb = spark_double_sql(fold_norm(q))
+    return (
+        f"round(CASE WHEN {na} = 0.0D OR {nb} = 0.0D THEN 0.0D "
+        f"ELSE {dot} / ({na} * {nb}) END, {round_digits})"
+    )
 
 
 def cosine_topk(

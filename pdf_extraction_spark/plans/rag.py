@@ -10,13 +10,39 @@ REPL prints the assembled context and source listing instead.
 
 The chunks table is any frame with (content, embedding, quality_score,
 date[, company, speaker]) — plans.pipeline + operators.embed produce it.
+
+Serving cost is fixed per-question cost (py4j calls, analysis, job
+launch), not scoring, so :func:`rag_search` is eager: each question runs
+exactly ONE Spark job over a plan built in a constant number of JVM
+calls (the similarity is one Spark-SQL expression string, the
+rerank/sort Columns depend only on ``as_of`` and are built once), and
+comes back as a k-row local frame.
+``.collect()`` on it and :func:`rag_context`, which joins its contents
+in Python, launch no further job.
 """
+
+from functools import lru_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.embed import embed_text
-from ..operators.topk import assemble_context, cosine_col, rerank_topk
+from ..operators.topk import sql_cosine_lit, weighted_score_col
+
+CONTEXT_SEP = "\n\n---\n\n"
+
+
+@lru_cache(maxsize=32)
+def _rerank_cols(as_of: str, has_quality: bool, id_cols: tuple):
+    """The question-independent part of the plan — the embedding
+    predicate, the company key, the rounded weighted score and the sort
+    order — built once per (as_of, schema shape) and reused: Columns are
+    unresolved expression trees, not bound to a frame or session. The
+    expressions are exactly :func:`~..operators.topk.rerank_topk`'s."""
+    quality = F.col("quality_score") if has_quality else None
+    ws = F.round(weighted_score_col(F.col("similarity"), F.col("date"), as_of, quality), 4)
+    order = (F.desc("weighted_score"), *(F.col(c) for c in id_cols))
+    return F.col("embedding").isNotNull(), F.upper(F.col("company")), ws, order
 
 
 def rag_search(
@@ -28,22 +54,40 @@ def rag_search(
     id_cols=("chunk_id",),
 ) -> DataFrame:
     """question → top-k reranked chunks (the reference
-    search_documents + weighted rerank, company filter included)."""
-    qv = embed_text(question)
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    scored = chunks.filter(F.col("embedding").isNotNull())
-    if company_filter and "company" in chunks.columns:
-        scored = scored.filter(F.upper(F.col("company")) == company_filter.upper())
-    scored = scored.withColumn(
-        "similarity", F.round(cosine_col(F.col("embedding"), q), 6)
+    search_documents + weighted rerank, company filter included).
+
+    Eager: runs one Spark job and returns the top-k as a local frame
+    (a LocalRelation) ordered by weighted_score desc then
+    ``id_cols``; its rows equal the lazy ``cosine_col`` + ``rerank_topk``
+    plan's bit for bit. ``company_filter`` is compared as a Column
+    literal, never spliced into SQL text."""
+    columns = chunks.columns
+    keep, company, ws, order = _rerank_cols(as_of, "quality_score" in columns, tuple(id_cols))
+    if company_filter and "company" in columns:
+        keep = keep & (company == F.lit(company_filter.upper()))
+    sim = F.expr(sql_cosine_lit("embedding", embed_text(question), 6))
+    top = (
+        chunks.filter(keep)
+        .withColumn("similarity", sim)
+        .withColumn("weighted_score", ws)
+        .orderBy(*order)
+        .limit(k)
     )
-    return rerank_topk(scored, as_of, k=k, id_cols=id_cols)
+    # ONE job: collecting a sort+limit plan runs a per-partition heap and
+    # merges the heaps on collect, in one stage (toArrow/toPandas execute it as two, with
+    # a shuffle). The k rows stay in the JVM and come back as a
+    # LocalRelation — exact by construction, no Python-side conversion.
+    spark = chunks.sparkSession
+    jrows = top._jdf.collectAsList()
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, top._jdf.schema()), spark)
 
 
 def rag_context(topk: DataFrame, content_col: str = "content") -> str:
-    """Top-k → ONE prompt-context string (X2 assembly), driver-side."""
-    row = assemble_context(topk, content_col=content_col, id_cols=()).first()
-    return row["context"] if row and row["n_contexts"] else ""
+    """Top-k → ONE prompt-context string (X2 assembly): the contents of
+    ``topk`` in its row order (NULLs skipped, like concat_ws), joined in
+    Python. On :func:`rag_search`'s local frame this runs no job."""
+    parts = (r[content_col] for r in topk.collect())
+    return CONTEXT_SEP.join(p for p in parts if p is not None)
 
 
 def parse_repl_line(line: str):

@@ -85,7 +85,7 @@ def main():
         if action == "empty":
             continue
 
-        topk = rag_search(chunks, question, k=5, company_filter=company).persist()
+        topk = rag_search(chunks, question, k=5, company_filter=company)
         rows = topk.collect()
         if not rows:
             print("no relevant chunks found")
@@ -100,7 +100,6 @@ def main():
             print("\n📚 DETAILED SOURCES:")
             print(format_search_results(results))
             show_sources = False
-        topk.unpersist()
     print("bye")
     spark.stop()
 

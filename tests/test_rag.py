@@ -1,11 +1,16 @@
 """X3 RAG search + REPL tests."""
 
+import math
+import random
 import subprocess
 import sys
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.operators.embed import embed_text
+from pdf_extraction_spark.operators.topk import cosine_col, rerank_topk
 from pdf_extraction_spark.plans.rag import parse_repl_line, rag_context, rag_search
 
 
@@ -282,6 +287,166 @@ class TestRagSearch:
         top = rag_search(chunks, "revenue growth", k=2)
         ctx = rag_context(top)
         assert ctx.count("\n\n---\n\n") == 1  # two chunks, one separator
+
+    def test_context_follows_topk_order_on_ties(self, spark):
+        """Two chunks tied on weighted_score (same embedding, date and
+        quality): the id column breaks the tie, and the context follows
+        the top-k row order, not the table's."""
+        emb = embed_text("revenue growth")
+        df = spark.createDataFrame(
+            [(2, "CIPLA", "2025-03-01", "second", 8.0, emb),
+             (1, "CIPLA", "2025-03-01", "first", 8.0, emb)],
+            _SCHEMA,
+        )
+        top = rag_search(df, "revenue growth", k=2)
+        rows = top.collect()
+        assert rows[0]["weighted_score"] == rows[1]["weighted_score"]
+        assert [r["chunk_id"] for r in rows] == [1, 2]
+        assert rag_context(top) == "first\n\n---\n\nsecond"
+
+
+_SCHEMA = (
+    "chunk_id long, company string, date string, content string, "
+    "quality_score double, embedding array<double>"
+)
+
+
+def _seed_search(chunks, question, k=5, company_filter=None, as_of="2025-05-01", id_cols=("chunk_id",)):
+    """The lazy Column-built plan rag_search replaces: 64 array literals,
+    cosine_col, rerank_topk."""
+    q = F.array(*[F.lit(float(x)) for x in embed_text(question)])
+    scored = chunks.filter(F.col("embedding").isNotNull())
+    if company_filter and "company" in chunks.columns:
+        scored = scored.filter(F.upper(F.col("company")) == company_filter.upper())
+    scored = scored.withColumn("similarity", F.round(cosine_col(F.col("embedding"), q), 6))
+    return rerank_topk(scored, as_of, k=k, id_cols=id_cols)
+
+
+@pytest.fixture()
+def edge_chunks(spark):
+    """Chunks with every input the rerank has a special case for."""
+    def row(i, company, date, content, quality, emb="embed"):
+        return (i, company, date, content, quality, embed_text(content) if emb == "embed" else emb)
+
+    return spark.createDataFrame(
+        [
+            row(1, "CIPLA", "2025-03-01", "revenue growth of 12 percent with strong margins", 8.0),
+            row(2, "CIPLA", "2020-01-01", "capex investment in the new facility", 6.0),
+            row(3, "LUPIN", None, "margin guidance for the fiscal year", 7.5),
+            row(4, "LUPIN", "not a date", "revenue and margins were stable", None),
+            row(5, "LUPIN", "2025-02-01", "an all-zero embedding", 5.0, [0.0] * 64),
+            row(6, "CIPLA", "2025-04-01", "a NULL embedding", 9.0, None),
+            row(7, "Sun Pharma", "2024-12-01", "thank you and goodbye", None),
+        ],
+        _SCHEMA,
+    )
+
+
+class TestRagSearchParity:
+    """rag_search's local frame equals the seed plan's rows exactly:
+    same order, same similarity and weighted_score bits, same schema."""
+
+    def _check(self, chunks, question, k, company_filter=None, id_cols=("chunk_id",)):
+        got = rag_search(chunks, question, k=k, company_filter=company_filter, id_cols=id_cols)
+        want = _seed_search(chunks, question, k=k, company_filter=company_filter, id_cols=id_cols)
+        assert got.schema == want.schema
+        got_rows, want_rows = got.collect(), want.collect()
+        assert got_rows == want_rows
+        return got_rows
+
+    def test_fixture_chunks(self, chunks):
+        for q in ("revenue growth margins", "capex investment facility"):
+            assert len(self._check(chunks, q, k=3)) == 3
+
+    @pytest.mark.parametrize("question", ["revenue growth margins", "capex"])
+    def test_edge_rows(self, edge_chunks, question):
+        rows = self._check(edge_chunks, question, k=10)  # k > the 6 eligible rows
+        assert len(rows) == 6 and 6 not in {r["chunk_id"] for r in rows}
+        zero = next(r for r in rows if r["chunk_id"] == 5)
+        assert zero["similarity"] == 0.0
+        # NULL / unparseable date → the bare similarity
+        for r in rows:
+            if r["chunk_id"] in (3, 4):
+                assert r["weighted_score"] == round(r["similarity"], 4)
+
+    def test_question_without_tokens(self, edge_chunks):
+        rows = self._check(edge_chunks, "", k=4)  # zero query vector
+        assert {r["similarity"] for r in rows} == {0.0}
+
+    def test_company_filter_and_missing_columns(self, edge_chunks):
+        self._check(edge_chunks, "revenue margins", k=10, company_filter="lupin")
+        bare = edge_chunks.drop("company", "quality_score")
+        rows = self._check(bare, "revenue margins", k=10, company_filter="lupin")
+        assert len(rows) == 6  # no company column: the filter is ignored
+
+
+class TestCompanyFilterQuoting:
+    """The filter is a Column literal: quotes, backslashes and case
+    never reach SQL text."""
+
+    @pytest.fixture()
+    def quoted(self, spark):
+        rows = [
+            (1, "O'Brien \\ Sons", "2025-03-01", "revenue growth quoted", 8.0),
+            (2, "LUPIN", "2025-03-01", "revenue growth lupin", 8.0),
+            (3, "Lupin", "2025-02-01", "revenue margins lupin", 7.0),
+        ]
+        return spark.createDataFrame(
+            [r + (embed_text(r[3]),) for r in rows], _SCHEMA
+        )
+
+    def test_quote_and_backslash(self, quoted):
+        rows = rag_search(quoted, "revenue growth", company_filter="o'brien \\ sons").collect()
+        assert [r["chunk_id"] for r in rows] == [1]
+        assert rows[0]["company"] == "O'Brien \\ Sons"
+
+    def test_mixed_case(self, quoted):
+        rows = rag_search(quoted, "revenue growth", company_filter="LuPiN").collect()
+        assert sorted(r["chunk_id"] for r in rows) == [2, 3]
+
+    def test_no_company_column_ignores_filter(self, quoted):
+        bare = quoted.drop("company")
+        rows = rag_search(bare, "revenue growth", company_filter="nobody").collect()
+        assert len(rows) == 3
+
+    def test_no_match_is_empty(self, quoted):
+        top = rag_search(quoted, "revenue growth", company_filter="nobody' OR '1'='1")
+        assert top.collect() == []
+        assert rag_context(top) == ""
+
+
+def test_one_spark_job_per_question(spark, chunks):
+    """rag_search, collecting its frame and rag_context together run
+    exactly one Spark job: the search itself."""
+    sc = spark.sparkContext
+    group = f"rag-one-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        top = rag_search(chunks, "revenue growth margins", k=2, company_filter="cipla")
+        rows = top.collect()
+        ctx = rag_context(top)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 2 and ctx
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_sql_double_literals_round_trip(spark):
+    from pdf_extraction_spark.operators.topk import fold_norm, norm_col, spark_double_sql
+
+    xs = [0.1, -0.0, 1e-05, 5e-324, 1 / 3, -2.5e300, 1.3633313431501976e-4]
+    row = spark.sql("SELECT " + ", ".join(spark_double_sql(x) for x in xs)).first()
+    assert [math.copysign(1, v) for v in row] == [math.copysign(1, x) for x in xs]
+    assert list(row) == xs
+    specials = spark.sql(
+        "SELECT " + ", ".join(spark_double_sql(x) for x in (math.inf, -math.inf, math.nan))
+    ).first()
+    assert specials[0] == math.inf and specials[1] == -math.inf and math.isnan(specials[2])
+    # the query norm folded in Python must be Spark's fold bit for bit
+    rnd = random.Random(7)
+    vecs = [[rnd.uniform(-1, 1) * 10 ** rnd.randint(-3, 3) for _ in range(64)] for _ in range(200)]
+    got = spark.createDataFrame([(v,) for v in vecs], "v array<double>").select(norm_col(F.col("v"))).collect()
+    assert [r[0] for r in got] == [fold_norm(v) for v in vecs]
 
 
 def test_repl_end_to_end():
